@@ -14,7 +14,9 @@ Mirrors the reference client semantics (client/client.go):
 
 The server-side pipeline (validate → enrich → encode → route → sink,
 server/sender/kafka.go:44-120) is the ``ingest`` function: one
-declarative plan instead of goroutine fan-out.
+declarative plan instead of goroutine fan-out, for DataFrames (bulk
+backfill, this buffer facade). The served endpoints run its in-process
+twin, ``ingest_http.ingest``, built from the same rule table and codec.
 """
 
 from __future__ import annotations

@@ -57,18 +57,21 @@ Two layers, gated differently:
   (``client/client.go:108-111`` turns on the gzip compressor), so the
   reference client's compression option needs no extra handling here.
 
-Both RPCs run the REAL ingest pipeline via
+Both RPCs run the served ingest pipeline via
 ``ingest_http.ingest_events`` (validate → enrich → route → Avro →
-size-limit as one micro-batch; failure indexes read back from the
-plan's own side-outputs), so HTTP and gRPC can never drift
-semantically — they share everything below request framing.
+size-limit in process, no Spark job per RPC; failure indexes come
+straight from the same per-event rule pass, ``transforms.REJECT_RULES``),
+so HTTP and gRPC can never drift semantically — they share everything
+below request framing, the sink contract included (module docstring
+of ingest_http).
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import SparkSession
 
 from eventsgateway_spark.ingest_http import MAX_REQUEST_EVENTS, ingest_events
 from eventsgateway_spark.operators import transforms
@@ -337,8 +340,8 @@ def grpc_available() -> bool:
 
 
 def serve_ingest_grpc(
-    spark: SparkSession,
-    sink: Callable[[DataFrame], None] | None = None,
+    spark: SparkSession | None,
+    sink: Callable[[pa.Table], None] | None = None,
     port: int = 0,
     max_message_bytes: int = transforms.DEFAULT_MAX_MESSAGE_BYTES,
     host: str = "127.0.0.1",
@@ -352,11 +355,14 @@ def serve_ingest_grpc(
     dependency).
 
     Uses generic method handlers with the hand-rolled codec as the
-    (de)serializers — no protoc-generated stubs needed. Error mapping
-    mirrors the reference: a rejected single event aborts SendEvent
-    with FAILED_PRECONDITION and the pipeline's reject reason
-    (server/sender/kafka.go:89-94); SendEvents always succeeds at the
-    RPC layer and reports per-event failures as FailureIndexes.
+    (de)serializers — no protoc-generated stubs needed. ``sink``
+    receives each request's accepted payloads as a ``pyarrow.Table``
+    with ``kafka.PAYLOAD_ARROW_SCHEMA`` (e.g. ``FileBus(...).produce``).
+
+    Error mapping mirrors the reference: a rejected single event
+    aborts SendEvent with FAILED_PRECONDITION and the pipeline's reject
+    reason (server/sender/kafka.go:89-94); SendEvents always succeeds
+    at the RPC layer and reports per-event failures as FailureIndexes.
 
     Like the reference's metrics interceptor (server/app/app.go:190-191
     reads SendEventsRequest.Retry as a label), per-request counters are

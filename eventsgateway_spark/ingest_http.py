@@ -6,14 +6,7 @@ with batch failures reported back as per-request indexes
 (`SendEventsResponse.FailureIndexes`, server/sender/kafka.go:44-68).
 This module closes that last behavioral seam with a dependency-free
 stdlib HTTP server (the same pattern as the Prometheus endpoint,
-streaming/metrics_http.py): a game client — or curl — gets a socket to
-point at, and each request body runs through the REAL ingest pipeline
-(`gateway.ingest`: validate → enrich → route → Avro → size-limit) as
-one transactional micro-batch, then lands on the configured sink.
-
-Wire protocol (JSON over HTTP; grpc/protobuf are not installed in this
-container, and the RPC *semantics* — not the framing — are the surface
-under test):
+streaming/metrics_http.py): a game client — or curl — gets a socket.
 
     POST /send-events   {"events": [{id,name,topic,props,timestamp}..]}
         -> 200 {"failure_indexes": [..]}     (mirrors SendEventsResponse)
@@ -23,138 +16,146 @@ under test):
            FailedPrecondition error of server/sender/kafka.go:89-94)
     GET  /healthz       -> 200 ok            (app healthcheck analog)
 
-Failure-index mechanics: the request index rides the pipeline as an
-extra ``_idx`` column (every stage is a filter/withColumn, so it flows
-untouched into the quarantine and oversized side-outputs) and the
-response indexes are read back from those side-outputs — the verdict
-comes from the SAME plan that produced the payloads, never from
-re-implemented driver-side validation.
+Like the reference server (server/sender/kafka.go:44-120), a request
+is validated, enriched, routed, Avro-encoded and size-limited in plain
+Python (``ingest``) — no Spark job runs on the RPC path; Spark is the
+bus's downstream consumer (``run_etl``). The reject rules are those of
+``transforms.REJECT_RULES`` and the bytes those of the Avro codec, the
+same two sources the Spark plan ``gateway.ingest`` (backfill) compiles,
+so both paths agree event for event (tests/test_property.py).
 
-Scale posture: one request = one micro-batch = a handful of driver-side
-rows, exactly the reference's per-RPC granularity; bulk backfill goes
-through the file/Kafka source path (gateway.Gateway.flush docstring),
-not this endpoint.
+Sink contract: ``sink`` receives a request's accepted payloads as ONE
+``pyarrow.Table`` with ``kafka.PAYLOAD_ARROW_SCHEMA`` (topic, key=None,
+value), in request order, and is not called when every event was
+rejected; ``FileBus(...).produce`` publishes it as one parquet file. A
+served real-Kafka sink needs a producer client library that is not
+installed, so it is out of scope (backfill reaches Kafka through
+``kafka.write_payloads_kafka``). Bulk backfill goes through the
+file/Kafka source path (gateway.Gateway.flush docstring), not here.
 """
 
 from __future__ import annotations
 
 import json
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
+import pyarrow as pa
+from pyspark.sql import SparkSession
 
-from eventsgateway_spark.gateway import IngestResult, ingest
 from eventsgateway_spark.operators import transforms
-from eventsgateway_spark.schemas import WIRE_EVENT_SCHEMA
+from eventsgateway_spark.sources.avro_codec import encode_event
+from eventsgateway_spark.sources.kafka import PAYLOAD_ARROW_SCHEMA
 
-#: Wire envelope + the request-index passthrough column — DERIVED from
-#: the canonical wire schema (fields forced nullable so validation,
-#: not createDataFrame, rejects bad rows); a hand copy would silently
-#: drift when schemas.py changes.
-_HTTP_WIRE_SCHEMA = T.StructType(
-    [T.StructField("_idx", T.LongType(), False)]
-    + [T.StructField(f.name, f.dataType, True) for f in WIRE_EVENT_SCHEMA.fields]
-)
-
-#: Per-request ceiling: one HTTP request = one micro-batch of
-#: driver-side rows (the reference's per-RPC granularity). Bulk
-#: backfill must use the file/Kafka source path — the same boundary
-#: Gateway.MAX_FLUSH_ROWS enforces on the buffer facade, enforced
-#: HERE because this endpoint calls ingest() directly.
+#: Per-request ceiling (the reference's per-RPC granularity); bulk
+#: backfill uses the file/Kafka source path, the boundary
+#: Gateway.MAX_FLUSH_ROWS also enforces.
 MAX_REQUEST_EVENTS = 10_000
 
+_INT64_MIN, _INT64_MAX = -(1 << 63), (1 << 63) - 1
 
-def _wire_rows(events: list[dict]) -> tuple[list[tuple], dict[int, str]]:
-    """(rows, framing_failures). An entry that is not an object — or
-    whose ``props`` is not an object — cannot even be represented as a
-    wire row; that is a FRAMING failure (the gRPC analog is a request
-    deserialization error), rejected here with a reason instead of
-    crashing the request into a 500. Contract-level rejects (empty id,
-    missing timestamp, oversize) still come from the pipeline plan."""
-    rows, framing = [], {}
+
+def _wire_row(ev) -> dict | str:
+    """One JSON event → a wire row (the five wire fields, absent ones
+    None), or its FRAMING failure (the gRPC analog is a deserialization
+    error), indexed like any reject instead of failing the request: a
+    non-object, a non-string id/name/topic or a timestamp outside int64
+    is ``malformed_event``, non-object ``props`` ``malformed_props``."""
+    if not isinstance(ev, dict):
+        return "malformed_event"
+    row = {f: ev.get(f) for f in ("id", "name", "topic")}
+    if any(v is not None and not isinstance(v, str) for v in row.values()):
+        return "malformed_event"
+    props = ev.get("props") or {}
+    if not isinstance(props, dict):
+        return "malformed_props"
+    # non-string prop values keep their JSON form ("true", "null",
+    # '{"b": 1}') — Python str() would store reprs ('True', "{'b': 1}")
+    # no JSON consumer can round-trip
+    row["props"] = {
+        str(k): (v if isinstance(v, str) else json.dumps(v))
+        for k, v in props.items()
+    }
+    ts = ev.get("timestamp")
+    try:
+        # booleans are ints in Python — JSON true must not become
+        # timestamp 1; floats (ms since epoch) truncate
+        ts = None if isinstance(ts, bool) else int(ts)
+    except (TypeError, ValueError):
+        ts = None  # the P1 rules reject it as missing_timestamp
+    except OverflowError:  # ±Infinity
+        return "malformed_event"
+    if ts is not None and not _INT64_MIN <= ts <= _INT64_MAX:
+        return "malformed_event"
+    row["timestamp"] = ts
+    return row
+
+
+def ingest(
+    events: list,
+    max_message_bytes: int = transforms.DEFAULT_MAX_MESSAGE_BYTES,
+    server_ts: int | None = None,
+) -> tuple[pa.Table, dict[int, str]]:
+    """The server pipeline in process, per event: frame → validate (P1)
+    → enrich (P5) → route (P6) → Avro-encode → size-limit (P2). Returns
+    (accepted payloads, reject reason by request index). ``server_ts``
+    pins serverTimestamp (default: now, one value per request as
+    current_timestamp is one per Spark plan)."""
+    if server_ts is None:
+        server_ts = int(time.time() * 1000)
+    topics: list[bytes] = []  # UTF-8, taken as is by the string column
+    values: list[bytes] = []
+    reasons: dict[int, str] = {}
     for i, ev in enumerate(events):
-        if not isinstance(ev, dict):
-            framing[i] = "malformed_event"
+        row = _wire_row(ev)
+        if isinstance(row, str):
+            reasons[i] = row
             continue
-        props = ev.get("props") or {}
-        if not isinstance(props, dict):
-            framing[i] = "malformed_props"
+        reason = transforms.reject_reason(row)
+        if reason is None:
+            try:
+                value = encode_event(
+                    row["id"], row["name"], row["props"], server_ts, row["timestamp"]
+                )
+                topic = (transforms.TOPIC_PREFIX + row["topic"]).encode()
+            except UnicodeEncodeError:  # a lone surrogate: "\ud800" is valid JSON
+                reasons[i] = "malformed_event"
+                continue
+            reason = transforms.reject_reason({"value": value}, max_message_bytes)
+        if reason is not None:
+            reasons[i] = reason
             continue
-        ts_raw = ev.get("timestamp")
-        try:
-            # booleans are ints in Python — JSON true must not become
-            # timestamp 1; floats (ms since epoch) truncate
-            ts = None if isinstance(ts_raw, bool) else int(ts_raw)
-        except (TypeError, ValueError):
-            ts = None  # validate() rejects it as missing_timestamp
-        rows.append(
-            (
-                i,
-                ev.get("id"),
-                ev.get("name"),
-                ev.get("topic"),
-                # non-string prop values keep their JSON form ("true",
-                # "null", '{"b": 1}') — Python str() would store reprs
-                # ('True', "{'b': 1}") no JSON consumer can round-trip
-                {
-                    str(k): (v if isinstance(v, str) else json.dumps(v))
-                    for k, v in props.items()
-                },
-                ts,
-            )
-        )
-    return rows, framing
+        topics.append(topic)
+        values.append(value)
+    table = pa.table(
+        [topics, pa.nulls(len(values), pa.binary()), values],
+        schema=PAYLOAD_ARROW_SCHEMA,
+    )
+    return table, reasons
 
 
 def ingest_events(
-    spark: SparkSession,
-    events: list[dict],
-    sink: Callable[[DataFrame], None] | None = None,
+    spark: SparkSession | None,
+    events: list,
+    sink: Callable[[pa.Table], None] | None = None,
     max_message_bytes: int = transforms.DEFAULT_MAX_MESSAGE_BYTES,
 ) -> tuple[list[int], dict[int, str]]:
-    """Run one request batch through the pipeline; deliver accepted
-    payloads to ``sink``; return (failure_indexes, reason_by_index).
-
-    The index list is sorted and unique, matching the semantics (not
-    the goroutine-append ordering) of the reference's FailureIndexes.
-    Serving-path job count: the two side-outputs are read in ONE
-    unioned collect, so a request costs two Spark jobs (verdict +
-    sink), not three."""
-    if not events:
-        return [], {}
-    rows, reasons = _wire_rows(events)
-    if rows:
-        # ONE partition per request: the default createDataFrame slices
-        # a request's handful of rows across defaultParallelism (32
-        # locally), so every serving action schedules 32 tasks — each
-        # with a Python-worker round for the Avro encode — and the bus
-        # write commits 32 part files. A single explicit slice makes
-        # each request one task and one part file end-to-end (measured
-        # 4.1-6.7 s -> 1.6-1.9 s per 50-event RPC on an idle local[32];
-        # coalesce(1) is NOT equivalent — its unioned parent locality
-        # preferences stall task placement on spark.locality.wait,
-        # measured ~5 s/action). Backfill stays on the partitioned
-        # file/Kafka source path (module docstring), never this one.
-        wire = spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), _HTTP_WIRE_SCHEMA
-        )
-        res: IngestResult = ingest(spark, wire, max_message_bytes=max_message_bytes)
-        side = res.quarantine.select("_idx", "reject_reason").unionByName(
-            res.oversized.select("_idx", "reject_reason")
-        )
-        for row in side.collect():
-            reasons[int(row["_idx"])] = row["reject_reason"]
-        if sink is not None:
-            sink(res.payloads)
+    """Run one request through ``ingest``, hand the accepted payloads to
+    ``sink`` (module docstring) and return (failure_indexes,
+    reason_by_index); ``spark`` is unused (no Spark job runs) and kept
+    for the transports' call shape. The indexes are sorted and unique:
+    the semantics, not the goroutine-append order, of FailureIndexes."""
+    payloads, reasons = ingest(events, max_message_bytes)
+    if sink is not None and payloads.num_rows:
+        sink(payloads)
     return sorted(reasons), reasons
 
 
 def serve_ingest(
-    spark: SparkSession,
-    sink: Callable[[DataFrame], None] | None = None,
+    spark: SparkSession | None,
+    sink: Callable[[pa.Table], None] | None = None,
     port: int = 0,
     max_message_bytes: int = transforms.DEFAULT_MAX_MESSAGE_BYTES,
     host: str = "127.0.0.1",
@@ -162,9 +163,9 @@ def serve_ingest(
     """Serve the ingest API on a daemon thread; returns (server,
     bound_port). ``port=0`` binds an ephemeral port; call
     ``server.shutdown()`` to stop. ``sink`` receives each request's
-    accepted-payload DataFrame (e.g. ``FileBus(...).produce`` or a
-    Kafka writer); ``None`` validates/encodes without delivering.
-    ``host`` defaults to loopback (safe for tests); a deployed
+    accepted payloads as a ``pyarrow.Table`` (module docstring), e.g.
+    ``FileBus(...).produce``; ``None`` validates/encodes without
+    delivering. ``host`` defaults to loopback (safe for tests); a deployed
     endpoint binds "0.0.0.0" (config key ``server.host``) — the
     served-S1 purpose needs a reachable socket, not just localhost."""
 
@@ -215,18 +216,13 @@ def serve_ingest(
                         self._reply(400, {"error": "events must be a list"})
                         return
                     if len(events) > MAX_REQUEST_EVENTS:
-                        # same backfill boundary Gateway.MAX_FLUSH_ROWS
-                        # guards: driver-shipped rows are per-RPC
-                        # granularity, not a bulk-load path
                         self._reply(413, {
                             "error": f"more than {MAX_REQUEST_EVENTS} events "
                             "in one request; use the file/Kafka source "
                             "path for backfill"
                         })
                         return
-                    fail, _ = ingest_events(
-                        spark, events, sink, max_message_bytes
-                    )
+                    fail, _ = ingest_events(spark, events, sink, max_message_bytes)
                     self._reply(200, {"failure_indexes": fail})
                 elif path == "/send-event":
                     fail, reasons = ingest_events(

@@ -39,11 +39,13 @@ class CCResult:
     labels: DataFrame  # (node, label) — label = min node id in component
     iterations: int  # alternating large/small-star rounds until fixpoint
     # converged star forest (checkpointed) — ``labels`` reads it, so it
-    # cannot be freed here; callers that materialize ``labels`` should
-    # release_frame(edges) afterwards (r16: superseded PER-ROUND
-    # checkpoints are already freed inside the loop — without that,
-    # every round's blocks survived until driver GC and repeated CC
-    # runs in one session degraded 5-10x under block-manager pressure)
+    # cannot be freed here: the caller owns it once connected_components
+    # returns (on an error the function frees it itself) and should
+    # release_frame(edges) after materializing ``labels`` (r16:
+    # superseded PER-ROUND checkpoints are already freed inside the
+    # loop — without that, every round's blocks survived until driver
+    # GC and repeated CC runs in one session degraded 5-10x under
+    # block-manager pressure)
     edges: DataFrame | None = None
 
 
@@ -138,24 +140,29 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> CCResult:
                 edges=e,
             )
         iterations = 0
-        while iterations < max_iter:
-            e_next, sig_next = _checkpoint_with_signature(
-                _small_star(_large_star(e))
-            )
-            # the new checkpoint is materialized, so the previous
-            # round's blocks are dead weight — free them now instead
-            # of at driver GC (r16: repeated CC runs in one session
-            # otherwise accumulate every round's blocks)
+        try:
+            while iterations < max_iter:
+                e_next, sig_next = _checkpoint_with_signature(
+                    _small_star(_large_star(e))
+                )
+                # the new checkpoint is materialized, so the previous
+                # round's blocks are dead weight — free them now instead
+                # of at driver GC (r16: repeated CC runs in one session
+                # otherwise accumulate every round's blocks)
+                release_frame(e)
+                e = e_next
+                iterations += 1
+                if sig_next == sig:
+                    break
+                sig = sig_next
+            else:
+                raise RuntimeError(
+                    f"star contraction did not converge in {max_iter} rounds"
+                )
+        except BaseException:
+            # no CCResult will own the current round's checkpoint
             release_frame(e)
-            e = e_next
-            iterations += 1
-            if sig_next == sig:
-                break
-            sig = sig_next
-        else:
-            raise RuntimeError(
-                f"star contraction did not converge in {max_iter} rounds"
-            )
+            raise
     finally:
         spark.conf.set(_CP, prev_cp)
     # Converged edge set is a forest of stars (child → component-min

@@ -5,16 +5,23 @@ the gRPC server (server/sender/kafka.go); here each is a declarative
 DataFrame→DataFrame function so Catalyst fuses them into the scan and
 the whole validate→enrich→route path stays inside whole-stage codegen.
 
-All functions accept either a batch or a streaming DataFrame with the
-wire-event schema (schemas.WIRE_EVENT_SCHEMA).
+All DataFrame functions accept either a batch or a streaming DataFrame
+with the wire-event schema (schemas.WIRE_EVENT_SCHEMA). The reject
+rules (P1, P2) are one table, REJECT_RULES, that compiles both to the
+Spark Columns of validate()/size_limit() and to the pure-Python
+reject_reason() the served endpoints run in process (ingest_http.py).
 """
 
 from __future__ import annotations
 
-from typing import NamedTuple
+import operator
+from functools import reduce
+from typing import Callable, Mapping, NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from eventsgateway_spark.schemas import WIRE_EVENT_SCHEMA
 
 #: Default producer limit — reference server/app/app.go:94
 #: ("kafka.producer.maxMessageBytes"); tests use 30,000
@@ -31,32 +38,84 @@ class ValidationSplit(NamedTuple):
     quarantine: DataFrame
 
 
-def _null_prop_value() -> F.Column:
-    """True when props carries a NULL value. The Avro map is
+# Value operations the reject checks are written in. Each works on a
+# Spark Column (building an expression) and on a plain Python value
+# (evaluating it), so one check serves both ingest paths.
+
+
+def _is_null(v):
+    return v.isNull() if isinstance(v, Column) else v is None
+
+
+def _byte_len(v):
+    return F.length(v) if isinstance(v, Column) else len(v)
+
+
+def _has_null_value(m):
+    """True when a props map carries a NULL value. The Avro map is
     string→string (schemas.py mirrors the reference proto): a null
     value crashes BOTH encoders at execution time, so it must be a
-    quarantine reason, not a batch-killing executor error."""
-    return F.col("props").isNotNull() & F.exists(
-        F.map_values("props"), lambda v: v.isNull()
+    reject reason, not a batch-killing executor error."""
+    if isinstance(m, Column):
+        return m.isNotNull() & F.exists(F.map_values(m), lambda v: v.isNull())
+    return m is not None and any(v is None for v in m.values())
+
+
+class RejectRule(NamedTuple):
+    reason: str
+    field: str
+    #: ``check(value, max_bytes)`` — true when the event is rejected
+    check: Callable
+
+
+#: THE ingest reject rules, in the order they are checked; the first
+#: rule that fires names the reject reason. P1 — the reference rejects
+#: events missing id/topic/name or with a zero timestamp
+#: (server/sender/kafka.go:89-94); null prop VALUES are rejected too
+#: because the wire map type cannot encode them. P2 — the encoded
+#: payload (``value``) must stay under the producer's message limit
+#: (server/sender/kafka.go:76-82), so that rule runs after the
+#: enrich (P5) / route (P6) / encode stages. The Spark plan
+#: (validate, size_limit) and the in-process path (reject_reason) are
+#: both derived from this table.
+REJECT_RULES: tuple[RejectRule, ...] = (
+    RejectRule("missing_id", "id", lambda v, _: _is_null(v) | (v == "")),
+    RejectRule("missing_topic", "topic", lambda v, _: _is_null(v) | (v == "")),
+    RejectRule("missing_name", "name", lambda v, _: _is_null(v) | (v == "")),
+    RejectRule("missing_timestamp", "timestamp", lambda v, _: _is_null(v) | (v == 0)),
+    RejectRule("null_prop_value", "props", lambda v, _: _has_null_value(v)),
+    RejectRule("too_large", "value", lambda v, max_bytes: _byte_len(v) >= max_bytes),
+)
+
+
+def _split(df: DataFrame, rules, max_bytes: int, col=F.col) -> ValidationSplit:
+    """Apply ``rules`` (fields read through ``col``): rows no rule fires
+    on are valid; the rest are quarantined with the first firing rule's
+    reason. The valid filter is the plain NOT(any rule) predicate, so
+    Catalyst can still push it into a scan."""
+    conds = [(r.check(col(r.field), max_bytes), r.reason) for r in rules]
+    reason = F.when(*conds[0])
+    for cond, why in conds[1:]:
+        reason = reason.when(cond, why)
+    bad = reduce(operator.or_, (cond for cond, _ in conds))
+    return ValidationSplit(
+        valid=df.filter(~bad),
+        quarantine=df.filter(bad).withColumn("reject_reason", reason),
     )
 
 
-def validity_condition() -> F.Column:
-    """P1 — the reference rejects events missing id/topic/name or with
-    a zero timestamp (server/sender/kafka.go:89-94); null prop VALUES
-    are additionally rejected because the wire map type cannot encode
-    them (see _null_prop_value)."""
-    return (
-        F.col("id").isNotNull()
-        & (F.col("id") != "")
-        & F.col("topic").isNotNull()
-        & (F.col("topic") != "")
-        & F.col("name").isNotNull()
-        & (F.col("name") != "")
-        & F.col("timestamp").isNotNull()
-        & (F.col("timestamp") != 0)
-        & ~_null_prop_value()
-    )
+def reject_reason(
+    row: Mapping, max_bytes: int = DEFAULT_MAX_MESSAGE_BYTES
+) -> str | None:
+    """Pure-Python twin of the Spark plan: the first REJECT_RULES
+    reason that fires on ``row``, or None. Only the rules whose field
+    ``row`` carries are checked — a wire row (all five wire fields,
+    absent ones as None) gets the P1 rules, ``{"value": payload}`` the
+    P2 rule — exactly as validate() and size_limit() split them."""
+    for r in REJECT_RULES:
+        if r.field in row and r.check(row[r.field], max_bytes):
+            return r.reason
+    return None
 
 
 def validate(df: DataFrame) -> ValidationSplit:
@@ -64,21 +123,9 @@ def validate(df: DataFrame) -> ValidationSplit:
     failure indexes to the client (server/app/server.go:59-65); the
     engine's analog is a quarantine side-output the caller can sink,
     tagged with the rejection reason."""
-    cond = validity_condition()
-    reason = (
-        F.when(F.col("id").isNull() | (F.col("id") == ""), "missing_id")
-        .when(F.col("topic").isNull() | (F.col("topic") == ""), "missing_topic")
-        .when(F.col("name").isNull() | (F.col("name") == ""), "missing_name")
-        .when(
-            F.col("timestamp").isNull() | (F.col("timestamp") == 0),
-            "missing_timestamp",
-        )
-        .otherwise("null_prop_value")
-    )
-    return ValidationSplit(
-        valid=df.filter(cond),
-        quarantine=df.filter(~cond).withColumn("reject_reason", reason),
-    )
+    wire = set(WIRE_EVENT_SCHEMA.fieldNames())
+    rules = [r for r in REJECT_RULES if r.field in wire]
+    return _split(df, rules, DEFAULT_MAX_MESSAGE_BYTES)
 
 
 def enrich(df: DataFrame) -> DataFrame:
@@ -114,11 +161,8 @@ def size_limit(df: DataFrame, payload_col: str, max_bytes: int = DEFAULT_MAX_MES
     """P2 — drop events whose encoded payload is ≥ max_bytes
     (server/sender/kafka.go:76-82). Applied after encoding, on the
     binary column, like the reference checks len(Avro bytes)."""
-    cond = F.length(F.col(payload_col)) < F.lit(max_bytes)
-    return ValidationSplit(
-        valid=df.filter(cond),
-        quarantine=df.filter(~cond).withColumn("reject_reason", F.lit("too_large")),
-    )
+    rules = [r for r in REJECT_RULES if r.field == "value"]
+    return _split(df, rules, max_bytes, lambda _: F.col(payload_col))
 
 
 def derive_date_partitions(df: DataFrame, ts_col: str = "clientTimestamp") -> DataFrame:

@@ -19,9 +19,12 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 PAYLOAD_SCHEMA = T.StructType(
     [
@@ -30,6 +33,10 @@ PAYLOAD_SCHEMA = T.StructType(
         T.StructField("value", T.BinaryType(), False),
     ]
 )
+
+#: PAYLOAD_SCHEMA as Arrow — the schema of an in-process producer's
+#: ``pyarrow.Table`` (ingest_http.ingest builds one per request).
+PAYLOAD_ARROW_SCHEMA = to_arrow_schema(PAYLOAD_SCHEMA)
 
 
 def kafka_available(spark: SparkSession) -> bool:
@@ -132,17 +139,30 @@ class FileBus:
         self.root = root
         os.makedirs(root, exist_ok=True)
 
-    def produce(self, payloads: DataFrame) -> None:
-        """Batch produce: append (topic, key, value) rows to the spool."""
+    def produce(self, payloads: DataFrame | pa.Table) -> None:
+        """Batch produce: append (topic, key, value) rows to the spool.
+
+        A DataFrame (backfill, ``gateway.ingest``) goes through Spark's
+        writer. A ``pyarrow.Table`` with PAYLOAD_ARROW_SCHEMA (the
+        served path's per-request payloads, already in driver memory)
+        is written as ONE parquet file by pyarrow, without a Spark job.
+        Both are staged and published by the same single rename."""
         import shutil
         import uuid
 
         token = uuid.uuid4().hex
         staging = os.path.join(self.root, f".staging-{token}")
         try:
-            payloads.select("topic", "key", "value").write.mode(
-                "overwrite"
-            ).parquet(staging)
+            if isinstance(payloads, pa.Table):
+                os.makedirs(staging)
+                pq.write_table(
+                    payloads.select(PAYLOAD_ARROW_SCHEMA.names),
+                    os.path.join(staging, f"part-00000-{token}.parquet"),
+                )
+            else:
+                payloads.select("topic", "key", "value").write.mode(
+                    "overwrite"
+                ).parquet(staging)
             # single rename = atomic publish: either the whole batch
             # directory becomes visible or none of it does
             os.rename(staging, os.path.join(self.root, f"batch-{token}"))

@@ -127,3 +127,21 @@ def test_q13_tolerates_malformed_client_json(spark, tmp_path):
            for r in QUERIES["q13_props_json_extract"](spark, str(tmp_path)).collect()}
     # valid k=12 -> bucket 1; dirty + missing -> the sentinel bucket
     assert out == {1: 1, -2147483648: 2}
+
+
+def test_non_convergence_releases_the_current_round_checkpoint(spark):
+    """A run cut short by ``max_iter`` raises, and no CCResult owns the
+    round's checkpoint, so it must be freed before the error leaves:
+    the RDD storage census ends where it started."""
+    import pytest
+
+    def n_stored_rdds() -> int:
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(32)], "u bigint, v bigint"
+    )
+    before = n_stored_rdds()
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(edges, max_iter=1)
+    assert n_stored_rdds() == before

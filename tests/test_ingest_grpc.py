@@ -221,7 +221,7 @@ def test_grpc_end_to_end(spark):
 
         from eventsgateway_spark.sources.avro_codec import decode_event
 
-        rec = decode_event(bytes(captured[0].collect()[0]["value"]))
+        rec = decode_event(captured[0].column("value")[0].as_py())
         assert rec["id"] == "a" and rec["clientTimestamp"] == 1_690_000_000_000
 
         send_event = channel.unary_unary(

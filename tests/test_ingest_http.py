@@ -229,6 +229,117 @@ def test_framing_failures_are_indexed_not_500(spark):
     assert reasons == {1: "malformed_event", 2: "malformed_props"}
 
 
+def test_mistyped_fields_are_malformed_event_over_http(spark, tmp_path):
+    """A non-string (or non-UTF-8) id/name/topic cannot be a wire
+    string (a JSON list name must not land as the string "[x]"):
+    malformed_event at its index, while valid neighbours land
+    unchanged."""
+    bus = FileBus(spark, str(tmp_path / "bus"))
+    server, port = serve_ingest(spark, sink=bus.produce)
+    try:
+        events = [
+            {**GOOD, "id": "ok-0"},
+            {**GOOD, "id": "n", "name": ["x"]},
+            {**GOOD, "id": 7},
+            {**GOOD, "id": "t", "topic": {"a": 1}},
+            {**GOOD, "id": "b", "name": True},
+            {**GOOD, "id": "ok-5"},
+            # a lone surrogate is valid JSON but no UTF-8 string
+            {**GOOD, "id": "\ud800"},
+            {**GOOD, "id": "s", "topic": "\udfff"},
+            {**GOOD, "id": "p", "props": {"k": "\ud800"}},
+        ]
+        code, body = _post(port, "/send-events", {"events": events})
+        assert (code, body["failure_indexes"]) == (200, [1, 2, 3, 4, 6, 7, 8])
+        code, body = _post(port, "/send-event", {**GOOD, "name": ["x"]})
+        assert (code, body) == (422, {"error": "malformed_event"})
+        recs = [decode_event(bytes(r["value"])) for r in bus.consume_batch().collect()]
+        assert sorted((r["id"], r["name"]) for r in recs) == [
+            ("ok-0", GOOD["name"]), ("ok-5", GOOD["name"])]
+    finally:
+        server.shutdown()
+
+
+def test_out_of_int64_timestamp_is_malformed_event_over_http(spark, tmp_path):
+    """A timestamp outside int64 (or infinite) is one malformed event,
+    not a 500 that drops its valid neighbours; the int64 bounds
+    themselves are valid timestamps."""
+    bus = FileBus(spark, str(tmp_path / "bus"))
+    server, port = serve_ingest(spark, sink=bus.produce)
+    try:
+        events = [
+            {**GOOD, "id": "lo", "timestamp": -(2**63)},
+            {**GOOD, "id": "over", "timestamp": 2**63},
+            {**GOOD, "id": "under", "timestamp": -(2**63) - 1},
+            {**GOOD, "id": "huge", "timestamp": 10**30},
+            {**GOOD, "id": "hi", "timestamp": 2**63 - 1},
+        ]
+        code, body = _post(port, "/send-events", {"events": events})
+        assert (code, body["failure_indexes"]) == (200, [1, 2, 3])
+        recs = {r["id"]: r for r in (decode_event(bytes(x["value"]))
+                                     for x in bus.consume_batch().collect())}
+        assert {k: r["clientTimestamp"] for k, r in recs.items()} == {
+            "lo": -(2**63), "hi": 2**63 - 1}
+        # json.dumps writes float infinity as the bare token Infinity,
+        # which json.loads (the server's parser) reads back
+        code, body = _post(port, "/send-events", {"events": [
+            {**GOOD, "id": "inf", "timestamp": float("inf")}, GOOD]})
+        assert (code, body["failure_indexes"]) == (200, [0])
+    finally:
+        server.shutdown()
+
+
+def test_served_path_starts_no_spark_job(spark, tmp_path, monkeypatch):
+    """The served RPC path is plain Python: over HTTP and through the
+    in-process gRPC load test, a request tagged with a job group (set
+    in the thread that serves it, as a tracing wrapper would) starts
+    no Spark job. One request publishes exactly one parquet file under
+    one batch directory, which consume_batch() reads back."""
+    import glob
+    import os
+
+    from eventsgateway_spark import ingest_http
+    from eventsgateway_spark.tools.loadtest import run_grpc_loadtest
+
+    sc = spark.sparkContext
+    group = "served-path-no-jobs"
+    orig = ingest_http.ingest_events
+
+    def tagged(spark_, events, *a, **kw):
+        sc.setJobGroup(group, "served request")
+        return orig(spark_, events, *a, **kw)
+
+    monkeypatch.setattr(ingest_http, "ingest_events", tagged)
+    root = str(tmp_path / "bus")
+    bus = FileBus(spark, root)
+    server, port = serve_ingest(spark, sink=bus.produce)
+    try:
+        code, body = _post(port, "/send-events", {"events": [
+            {**GOOD, "id": "s-0"}, {**GOOD, "id": ""}, {**GOOD, "id": "s-2"}]})
+        assert (code, body["failure_indexes"]) == (200, [1])
+    finally:
+        server.shutdown()
+    files = glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
+    assert len(files) == 1
+    assert os.path.basename(os.path.dirname(files[0])).startswith("batch-")
+    rep = run_grpc_loadtest(spark, threads=2, duration_s=0.5, batch_size=3,
+                            bus_root=str(tmp_path / "grpc_bus"), seed=5,
+                            transport="inproc")
+    assert rep["ingested_ok"] == rep["sent"] > 0
+    try:
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # the probe sees a job when there is one
+        sc.setJobGroup(group, "control")
+        spark.range(1).collect()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    ids = sorted(decode_event(bytes(r["value"]))["id"]
+                 for r in bus.consume_batch().collect())
+    assert ids == ["s-0", "s-2"]
+
+
 def test_framing_failures_over_http(spark):
     server, port = serve_ingest(spark, sink=None)
     try:
@@ -253,7 +364,7 @@ def test_json_faithful_prop_coercion_and_bool_timestamp(spark):
 
     from eventsgateway_spark.sources.avro_codec import decode_event
 
-    rec = decode_event(bytes(captured[0].collect()[0]["value"]))
+    rec = decode_event(captured[0].column("value")[0].as_py())
     assert rec["props"] == {"retry": "true", "ref": "null",
                             "meta": _json.dumps({"b": 1})}
 

@@ -8,7 +8,7 @@ examples cheaply."""
 from __future__ import annotations
 
 import pandas as pd
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from eventsgateway_spark.sources.avro_codec import decode_event, encode_event
@@ -499,3 +499,140 @@ def test_lsh_ladder_invariants(est, floor_p, floor_t):
     base2 = planes_for_rows(est * 2, floor_p)
     t2 = tables_for_rows(est * 2, floor_p, floor_t)
     assert base2 >= base and t2 >= t
+
+
+# ---------------------------------------------------------------------------
+# Served ingest (in-process Python) vs the Spark ingest plan
+# ---------------------------------------------------------------------------
+
+_PARITY_MAX_BYTES = 300
+_wire_str = st.one_of(st.none(), st.just(""), st.text(
+    alphabet=st.characters(codec="utf-8"), min_size=1, max_size=12))
+_wire_ts = st.one_of(st.just("absent"), st.none(), st.just(0),
+                     st.integers(min_value=-(2**63), max_value=2**63 - 1))
+
+
+@st.composite
+def _wire_event(draw):
+    """A JSON wire event. ``pad`` (when drawn) grows one prop value so
+    the encoded payload lands ``pad`` bytes off the size limit."""
+    ev = {"id": draw(_wire_str), "name": draw(_wire_str),
+          "topic": draw(_wire_str),
+          "props": draw(st.dictionaries(utf8, utf8, max_size=4)),
+          "timestamp": draw(_wire_ts)}
+    if ev["timestamp"] == "absent":
+        del ev["timestamp"]
+    pad = draw(st.sampled_from([None, -1, 0, 1]))
+    if pad is not None and all(ev.get(f) for f in ("id", "name", "topic", "timestamp")):
+        _pad_to(ev, _PARITY_MAX_BYTES + pad)
+    return ev
+
+
+def _pad_to(ev: dict, target: int) -> None:
+    """Grow prop ``pad`` until the event's payload is ``target`` bytes
+    (or the nearest size past it: a length varint can skip one)."""
+    import time
+
+    now = int(time.time() * 1000)  # same varint width as the plan's
+    ev["props"]["pad"] = ""
+    while True:
+        n = len(encode_event(ev["id"], ev["name"], ev["props"], now, ev["timestamp"]))
+        if n >= target:
+            return
+        ev["props"]["pad"] += "x" * (target - n)
+
+
+def _spark_ingest(spark, events: list, max_bytes: int):
+    """The Spark plan's verdicts and payloads for ``events``: reasons by
+    request index, and the accepted payloads in request order."""
+    from pyspark.sql import functions as F
+
+    from eventsgateway_spark.gateway import ingest
+    from eventsgateway_spark.ingest_http import _wire_row
+
+    rows = []
+    for i, ev in enumerate(events):
+        r = _wire_row(ev)
+        # props travel as an entry list: a Python dict becomes a Java
+        # HashMap on its way into createDataFrame, which reorders the
+        # entries (the Avro bytes of a map follow its entry order)
+        rows.append((i, r["id"], r["name"], r["topic"],
+                     list(r["props"].items()), r["timestamp"]))
+    wire = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1),
+        "_idx long, id string, name string, topic string, "
+        "entries array<struct<k:string,v:string>>, timestamp long",
+    ).select("_idx", "id", "name", "topic",
+             F.map_from_entries("entries").alias("props"), "timestamp")
+    res = ingest(spark, wire, max_message_bytes=max_bytes)
+    side = res.quarantine.select("_idx", "reject_reason").unionByName(
+        res.oversized.select("_idx", "reject_reason"))
+    reasons = {r["_idx"]: r["reject_reason"] for r in side.collect()}
+    payloads = [(r["topic"], r["key"], bytes(r["value"]))
+                for r in res.payloads.collect()]
+    return reasons, payloads
+
+
+_BOUNDARY = [{"id": "i", "name": "n", "topic": "t", "props": {},
+              "timestamp": 1_700_000_000_000} for _ in range(4)]
+for _ev, _d in zip(_BOUNDARY, (-1, 0, 1, -2)):
+    _pad_to(_ev, _PARITY_MAX_BYTES + _d)
+
+
+@settings(max_examples=25, deadline=None)
+@given(events=st.lists(_wire_event(), min_size=1, max_size=10))
+@example(events=_BOUNDARY)
+def test_served_ingest_matches_spark_plan(spark, events):
+    """For generated wire events, the in-process served path
+    (ingest_http.ingest) and the Spark plan (gateway.ingest) give the
+    same reject reason at every index — too_large at the size boundary
+    included — and byte-identical Avro payloads once serverTimestamp is
+    pinned to the plan's value."""
+    import time
+
+    from eventsgateway_spark.ingest_http import ingest
+
+    want_reasons, want = _spark_ingest(spark, events, _PARITY_MAX_BYTES)
+    # nothing accepted: the plan's timestamp is unreadable, but any
+    # "now" has its varint width, so the size verdicts still compare
+    sts = decode_event(want[0][2])["serverTimestamp"] if want else int(time.time() * 1000)
+    table, reasons = ingest(events, _PARITY_MAX_BYTES, server_ts=sts)
+    assert reasons == want_reasons
+    got = [(r["topic"], r["key"], r["value"]) for r in table.to_pylist()]
+    assert got == want
+
+
+def test_every_reject_rule_fires_alike_in_python_and_spark(spark):
+    """Each REJECT_RULES entry, null prop values included (which the
+    JSON transports never produce), gives the same verdict through
+    transforms.reject_reason and through validate()/size_limit()."""
+    from eventsgateway_spark.operators import transforms
+
+    ok = {"id": "i", "name": "n", "topic": "t", "props": {"k": "v"},
+          "timestamp": 5}
+    rows = [ok] + [{**ok, f: v} for f, v in [
+        ("id", None), ("id", ""), ("topic", ""), ("name", None),
+        ("timestamp", None), ("timestamp", 0), ("props", {"k": None}),
+        ("props", None), ("props", {}),
+    ]] + [{**ok, "id": "", "name": ""}]
+    py = {i: transforms.reject_reason(r) for i, r in enumerate(rows)}
+    assert list(py.values()) == [
+        None, "missing_id", "missing_id", "missing_topic", "missing_name",
+        "missing_timestamp", "missing_timestamp", "null_prop_value",
+        None, None, "missing_id"]
+    df = spark.createDataFrame(
+        [(i, r["id"], r["name"], r["topic"], r["props"], r["timestamp"])
+         for i, r in enumerate(rows)],
+        "_idx long, id string, name string, topic string, "
+        "props map<string,string>, timestamp long")
+    valid, quarantine = transforms.validate(df)
+    got = {r["_idx"]: r["reject_reason"] for r in quarantine.collect()}
+    got.update((r["_idx"], None) for r in valid.collect())
+    assert got == py
+
+    sizes = spark.createDataFrame([(b"x" * n,) for n in (9, 10, 11)], "value binary")
+    kept, over = transforms.size_limit(sizes, "value", 10)
+    assert sorted(len(r["value"]) for r in over.collect()) == [10, 11]
+    assert [r["reject_reason"] for r in over.collect()] == ["too_large"] * 2
+    assert [transforms.reject_reason({"value": b"x" * n}, 10)
+            for n in (9, 10, 11)] == [None, "too_large", "too_large"]
