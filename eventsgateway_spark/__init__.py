@@ -14,9 +14,19 @@ retry loops — client/async.go) is *replaced* by Structured Streaming
 primitives, not ported.
 """
 
-from eventsgateway_spark.session import get_spark, stop_spark
-from eventsgateway_spark.engine import Engine
+import importlib
 
 __version__ = "0.1.0"
 
 __all__ = ["get_spark", "stop_spark", "Engine", "__version__"]
+
+# Exports resolve on first use (PEP 562), so importing a submodule, e.g.
+# ``python -m eventsgateway_spark.worker_daemon``, loads no Spark session
+# or engine code.
+_LAZY = {"get_spark": "session", "stop_spark": "session", "Engine": "engine"}
+
+
+def __getattr__(name: str):
+    if name not in _LAZY:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    return getattr(importlib.import_module(f"{__name__}.{_LAZY[name]}"), name)

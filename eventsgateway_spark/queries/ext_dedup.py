@@ -1616,56 +1616,17 @@ def media_sigs(spark: SparkSession, sf_dir: str, modality: str) -> DataFrame:
     return sigs
 
 
-# Session-scoped cache of the banded PAIR frame itself — one level up
-# from _MEDIA_SIG_CACHE, the near_dup_pair_frame discipline applied to
-# the media family (round-15, guide §2.4): THREE registry queries
-# consume each modality's pair set (q89 + q91 the image one, q90 + q91
-# the audio one), and in a shared bench/notebook session each used to
-# re-run the band explode + self-join + Hamming verify over the cached
-# signatures (~0.6 s per modality at sf0.1 — measured round-15 probe).
-# Same keying/fingerprint-eviction/survives-unpin_all discipline; at
-# fixture scale the plain lineage is returned so every driver oracle
-# run hash-checks its full construction independently.
-_MEDIA_PAIR_CACHE: dict[tuple[str, str, str], tuple[str, DataFrame]] = session_cache({})
-
-
 def media_band_pairs(spark: SparkSession, sf_dir: str, modality: str) -> DataFrame:
     """(d1, d2, hamming) — THE shared Manku banded near-dup pair frame
-    per modality (q89/q90's exact construction), materialized once per
-    (session, fixture) above fixture scale."""
-    from eventsgateway_spark.queries._util import (
-        is_fixture_scale,
-        release_frame,
-    )
-
+    per modality (q89/q90's exact construction) over the cached
+    signatures (``media_sigs``). Not cached itself: each consumer's
+    execution runs the banding join once, and the plan costs nothing
+    to build."""
     sig_col = {"image": "dhash", "audio": "afp"}[modality]
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.realpath(sf_dir),
-        modality,
-    )
-    fp = _fixture_fingerprint(sf_dir)
-    hit = _MEDIA_PAIR_CACHE.get(key)
-    if hit is not None:
-        cached_fp, cached = hit
-        if cached_fp == fp:
-            return cached
-        del _MEDIA_PAIR_CACHE[key]
-        release_frame(cached)
-    pairs = hamming_band_pairs(
+    return hamming_band_pairs(
         media_sigs(spark, sf_dir, modality), sig_col,
         IMG_HAM_BANDS, _IMG_BAND_W, IMG_HAM_MAX,
     )
-    if not is_fixture_scale(table(spark, sf_dir, "documents")):
-        # cached UNmaterialized (r16): with the session caches evicted
-        # between bench queries, every consumer is single-use within
-        # its own execution — the localCheckpoint job cost more than
-        # the recompute it could ever save (the pair join reads the
-        # checkpointed signature frame, not the decode tier). A
-        # same-session second consumer recomputes the banding join
-        # over the still-cached signatures; results identical.
-        _MEDIA_PAIR_CACHE[key] = (fp, pairs)
-    return pairs
 
 
 @query(

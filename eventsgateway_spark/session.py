@@ -7,8 +7,20 @@ greatest()-guarded integer divisions in ext_sampling) and scale (AQE,
 shuffle partitions, Arrow).
 
 Local-mode notes: tests run on ``local[N]`` (single JVM). On a real
-cluster the same confs apply; the only local-specific knob is
-``spark.driver.memory``.
+cluster the same confs apply; the local-specific knobs are
+``spark.driver.memory`` and ``spark.python.daemon.module``.
+
+Python worker daemon: on a ``local``/``local[...]`` master the session
+sets ``spark.python.daemon.module`` to ``eventsgateway_spark.worker_daemon``
+(unless the caller passes its own). Spark's default daemon makes every
+Python worker task re-read ``pyspark.zip`` about 16 times on CPython
+< 3.12, 120-200 ms per task before the UDF starts; that is a fixed cost on
+every ``run_etl`` micro-batch (its Avro decode is a pandas UDF) and every
+UDF query. The engine daemon re-reads a zip only when it changed. Only
+local masters get it: there the workers inherit the PYTHONPATH that
+``get_spark`` puts the repo root on, while on a cluster master the module
+may not be importable before any ``addPyFile``, so those sessions keep
+Spark's default daemon, as do sessions not built here.
 """
 
 from __future__ import annotations
@@ -64,10 +76,15 @@ def get_spark(app_name: str = "eventsgateway_spark", **extra_confs: str) -> Spar
         "spark.executorEnv.PYTHONPATH", os.environ.get("PYTHONPATH", pkg_root)
     )
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    master = f"local[{cpus}]" if cpus else "local[*]"
-    builder = SparkSession.builder.master(
-        os.environ.get("SPARK_GRAFT_MASTER", master)
-    ).appName(app_name)
+    master = os.environ.get(
+        "SPARK_GRAFT_MASTER", f"local[{cpus}]" if cpus else "local[*]"
+    )
+    if master == "local" or master.startswith("local["):
+        # the workers' PYTHONPATH (set above) carries the package here
+        extra_confs.setdefault(
+            "spark.python.daemon.module", "eventsgateway_spark.worker_daemon"
+        )
+    builder = SparkSession.builder.master(master).appName(app_name)
     for k, v in {**_DEFAULT_CONFS, **extra_confs}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

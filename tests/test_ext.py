@@ -1915,53 +1915,43 @@ def test_media_sig_cache_shared_across_queries(spark):
         }
         assert len(got) == 50  # rides the warm entry, still correct rows
     finally:
-        from eventsgateway_spark.queries.ext_dedup import _MEDIA_PAIR_CACHE
-
-        for cache in (_MEDIA_SIG_CACHE, _MEDIA_PAIR_CACHE):
-            for _fp, frame in cache.values():
-                release_frame(frame)
-            cache.clear()
+        for _fp, frame in _MEDIA_SIG_CACHE.values():
+            release_frame(frame)
+        _MEDIA_SIG_CACHE.clear()
 
 
-def test_media_pair_cache_shared_and_exact(spark):
-    """round-15: the banded pair frame itself is session-cached one
-    level above the signature cache (q89 + q91 share the image pairs,
-    q90 + q91 the audio pairs). Cached rows must equal the uncached
-    construction exactly, the driver's oracle scale must stay
-    uncached, and a second consumer must get the SAME frame object."""
-    from eventsgateway_spark.queries import QUERIES
+def test_media_band_pairs_ride_cached_sigs(spark):
+    """The banded pair frame keeps no cache of its own (an unmaterialized
+    plan saves nothing worth keeping): each call builds a new pair frame
+    over the session-cached signatures, and its rows equal the same
+    construction over freshly computed signatures."""
     from eventsgateway_spark.queries.ext_dedup import (
         IMG_HAM_BANDS,
         IMG_HAM_MAX,
         _IMG_BAND_W,
-        _MEDIA_PAIR_CACHE,
         _MEDIA_SIG_CACHE,
+        _image_sigs,
         hamming_band_pairs,
         media_band_pairs,
-        media_sigs,
     )
     from eventsgateway_spark.queries._util import release_frame
 
-    # oracle scale: no caching, q89 still returns its full lineage
-    QUERIES["q89_image_dhash_near_dup"](spark, SF_ORACLE).count()
-    assert not _MEDIA_PAIR_CACHE
-
     sf01 = "/root/testdata/sf0.1"
     try:
-        cached = media_band_pairs(spark, sf01, "image")
-        assert media_band_pairs(spark, sf01, "image") is cached
+        pairs = media_band_pairs(spark, sf01, "image")
+        assert media_band_pairs(spark, sf01, "image") is not pairs
+        assert [k[2] for k in _MEDIA_SIG_CACHE] == ["image"]
         fresh = hamming_band_pairs(
-            media_sigs(spark, sf01, "image"), "dhash",
+            _image_sigs(spark, sf01), "dhash",
             IMG_HAM_BANDS, _IMG_BAND_W, IMG_HAM_MAX,
         )
-        assert sorted(map(tuple, cached.collect())) == sorted(
+        assert sorted(map(tuple, pairs.collect())) == sorted(
             map(tuple, fresh.collect())
         )
     finally:
-        for cache in (_MEDIA_SIG_CACHE, _MEDIA_PAIR_CACHE):
-            for _fp, frame in cache.values():
-                release_frame(frame)
-            cache.clear()
+        for _fp, frame in _MEDIA_SIG_CACHE.values():
+            release_frame(frame)
+        _MEDIA_SIG_CACHE.clear()
 
 
 def test_doc_tokens_frame_cache_and_parity(spark, monkeypatch):
@@ -2174,7 +2164,6 @@ def test_unpin_all_evicts_session_caches(spark):
         ed._MINHASH_CACHE,
         ed._SIMHASH_SIG_CACHE,
         ed._MEDIA_SIG_CACHE,
-        ed._MEDIA_PAIR_CACHE,
         es._LSH_BUCKET_CACHE,
         es._NORM_CACHE,
         es._IVF_ASSIGN_CACHE,
@@ -2187,12 +2176,15 @@ def test_unpin_all_evicts_session_caches(spark):
     sf01 = "/root/testdata/sf0.1"
     if not os.path.exists(os.path.join(sf01, "documents.parquet")):
         pytest.skip("sf0.1 fixture absent")
-    assert u.doc_tokens_frame(spark, sf01) is not None
-    assert es.norm_frame(spark, sf01) is not None
-    assert u._DOCTOK_CACHE and es._NORM_CACHE
-    u.unpin_all()
-    for cache in u._SESSION_CACHES:
-        assert not cache, "unpin_all left a session cache populated"
+    try:
+        assert u.doc_tokens_frame(spark, sf01) is not None
+        assert es.norm_frame(spark, sf01) is not None
+        assert u._DOCTOK_CACHE and es._NORM_CACHE
+        u.unpin_all()
+        for cache in u._SESSION_CACHES:
+            assert not cache, "unpin_all left a session cache populated"
+    finally:
+        u.unpin_all()  # a failed assert must not leave sf0.1 blocks pinned
 
 
 def test_media_batch_kernels_match_scalar_law():
